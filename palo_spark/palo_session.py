@@ -784,10 +784,16 @@ class PaloSession:
         #: tokens). A table mutation changes its token, so stale hits
         #: are impossible by construction — no explicit invalidation.
         #: Only small results are cached (Doris cache_row_limit).
+        #: A hit is served on the driver with no Spark job: each entry
+        #: is a JVM Dataset over a LocalRelation of at most
+        #: cache_row_limit rows; eviction is least-recently-used.
         self.result_cache_enabled = bool(result_cache)
         self.cache_row_limit = int(cache_row_limit)
         self.cache_entries = int(cache_entries)
-        self._result_cache: dict = {}  # key -> (rows, schema)
+        self._result_cache: dict = {}  # key -> JVM Dataset (LocalRelation)
+        # sql() may run on several threads (workload groups admit
+        # concurrent statements); an LRU hit re-inserts its entry
+        self._result_cache_lock = _threading.Lock()
         self.last_cache_hit = False  # observability for tests/metrics
         #: storage-side indexes (CREATE INDEX ... USING
         #: INVERTED | NGRAM_BF | BITMAP, plus the `bloom_filter_columns`
@@ -2892,7 +2898,7 @@ class PaloSession:
         if build == "DEFERRED":
             # queryable as a typed EMPTY snapshot until the first
             # refresh; _sql_nocache keeps this schema-only probe lazy
-            # (the cache store path would eagerly take() the full body)
+            # (the cache store path would eagerly collect the full body)
             schema = self._sql_nocache(body).schema
             self.spark.createDataFrame([], schema).createOrReplaceTempView(name)
         else:
@@ -2902,7 +2908,7 @@ class PaloSession:
     def _sql_nocache(self, text: str):
         """Run a statement with the result cache bypassed — for internal
         work (MV refresh/build) where sql()'s store path would eagerly
-        take() up to cache_row_limit+1 rows only for the caller to
+        collect up to cache_row_limit+1 rows only for the caller to
         recompute the query anyway (write path), paying it twice.
         Transparent MV rewrite is also off: a refresh must recompute
         from the bases, never from a (self- or sibling-) snapshot."""
@@ -6150,11 +6156,13 @@ class PaloSession:
                 # (r9 audit: SET time_zone × cache, wrong-answer repro)
                 self.spark.conf.get("spark.sql.session.timeZone", None),
             )
-            hit = self._result_cache.get(key)
+            with self._result_cache_lock:
+                hit = self._result_cache.pop(key, None)
+                if hit is not None:
+                    self._result_cache[key] = hit  # most recently used last
             if hit is not None:
-                rows, schema = hit
                 self.last_cache_hit = True
-                return self.spark.createDataFrame(rows, schema)
+                return DataFrame(hit, self.spark)
         self.last_match_indexed = False
         self.last_like_indexed = False
         self.last_eq_indexed = False
@@ -6183,10 +6191,17 @@ class PaloSession:
             else:
                 df = doris_sql(self.spark, stripped)
         if key is not None:
-            rows = df.take(self.cache_row_limit + 1)
-            if len(rows) <= self.cache_row_limit:
-                if len(self._result_cache) >= self.cache_entries:
-                    self._result_cache.pop(next(iter(self._result_cache)))
-                self._result_cache[key] = (rows, df.schema)
-                return self.spark.createDataFrame(rows, df.schema)
+            # one job collects the rows into the JVM driver; the entry is
+            # a LocalRelation, which collect() serves without a job. The
+            # JVM createDataFrame rejects CHAR/VARCHAR, which a Dataset
+            # schema already reports as string.
+            jrows = df.limit(self.cache_row_limit + 1)._jdf.collectAsList()
+            if jrows.size() <= self.cache_row_limit:
+                entry = self.spark._jsparkSession.createDataFrame(
+                    jrows, df._jdf.schema())
+                with self._result_cache_lock:
+                    if len(self._result_cache) >= self.cache_entries:
+                        self._result_cache.pop(next(iter(self._result_cache)))
+                    self._result_cache[key] = entry
+                return DataFrame(entry, self.spark)
         return df

@@ -337,15 +337,146 @@ def test_result_cache_hit_and_invalidate(spark, tmp_path):
 
 
 def test_result_cache_row_limit_bypass(spark, tmp_path):
+    # 3 rows: never stored above the limit (limit + 1 = 3 is the
+    # boundary), stored at a limit of exactly 3; every row returned
+    for limit, cached in ((1, False), (2, False), (3, True)):
+        ps = PaloSession(
+            spark, location_root=str(tmp_path / str(limit)), result_cache=True,
+            cache_row_limit=limit,
+        )
+        ps.sql("CREATE TABLE rc2 (k INT) DUPLICATE KEY(k)")
+        ps.sql("INSERT INTO rc2 VALUES (1),(2),(3)")
+        q = "SELECT k FROM rc2"
+        assert sorted(r["k"] for r in ps.sql(q).collect()) == [1, 2, 3]
+        out = ps.sql(q).collect()
+        assert ps.last_cache_hit is cached, limit
+        assert sorted(r["k"] for r in out) == [1, 2, 3]
+
+
+def test_result_cache_evicts_least_recently_used(spark, tmp_path):
     ps = PaloSession(
-        spark, location_root=str(tmp_path), result_cache=True, cache_row_limit=1
+        spark, location_root=str(tmp_path), result_cache=True, cache_entries=2
     )
-    ps.sql("CREATE TABLE rc2 (k INT) DUPLICATE KEY(k)")
-    ps.sql("INSERT INTO rc2 VALUES (1),(2),(3)")
-    q = "SELECT k FROM rc2"
-    assert len(ps.sql(q).collect()) == 3
+    ps.sql("CREATE TABLE lru (k INT) DUPLICATE KEY(k)")
+    ps.sql("INSERT INTO lru VALUES (1),(2)")
+    a, b, c = (f"SELECT {e} AS x FROM lru" for e in ("MIN(k)", "MAX(k)", "COUNT(*)"))
+    for q in (a, b):
+        ps.sql(q)
+        assert ps.last_cache_hit is False
+    assert ps.sql(a).collect()[0]["x"] == 1 and ps.last_cache_hit is True
+    ps.sql(c)  # evicts B, the least recently used, not A
+    assert ps.sql(a).collect()[0]["x"] == 1 and ps.last_cache_hit is True
+    ps.sql(b)
+    assert ps.last_cache_hit is False
+
+
+def test_result_cache_concurrent_hits_and_evictions(spark, tmp_path):
+    import sys
+    import threading
+
+    ps = PaloSession(
+        spark, location_root=str(tmp_path), result_cache=True, cache_entries=2
+    )
+    ps.sql("CREATE TABLE lrt (k INT) DUPLICATE KEY(k)")
+    ps.sql("INSERT INTO lrt VALUES (1),(2),(3)")
+    want = {f"SELECT COUNT(*) + {i} AS x FROM lrt": 3 + i for i in range(3)}
+    texts = list(want)
+    errors: list = []
+
+    def client(w: int) -> None:
+        try:
+            for j in range(12):
+                q = texts[(w + j // 3) % len(texts)]  # runs of 3: hits
+                got = ps.sql(q).collect()[0]["x"]
+                if got != want[q]:
+                    errors.append((q, got))
+        except Exception as e:  # noqa: BLE001 - reported by the assert
+            errors.append(e)
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        workers = [threading.Thread(target=client, args=(w,)) for w in range(6)]
+        for t in workers:
+            t.start()
+        for t in workers:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in workers)
+    assert errors == []
+    assert len(ps._result_cache) <= 2
+
+
+def _jobs_run_by(spark, action) -> int:
+    """Spark jobs that ``action()`` launches, read from the status
+    tracker. A marker job in a later group is awaited first: the listener
+    records job starts in order, so once the marker shows, so do the
+    action's jobs."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, marker = f"probe-{uuid.uuid4()}", f"marker-{uuid.uuid4()}"
+    try:
+        sc.setJobGroup(group, group)
+        action()
+        sc.setJobGroup(marker, marker)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not st.getJobIdsForGroup(marker) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    return len(st.getJobIdsForGroup(group))
+
+
+def test_result_cache_frames_collect_without_a_job(spark, tmp_path):
+    ps = PaloSession(spark, location_root=str(tmp_path), result_cache=True)
+    ps.sql("CREATE TABLE rj (k INT, v DOUBLE) DUPLICATE KEY(k)")
+    ps.sql("INSERT INTO rj VALUES (1,1.0),(2,2.0),(1,3.0)")
+    q = "SELECT k, SUM(v) AS s FROM rj GROUP BY k ORDER BY k"
+    want = [(1, 4.0), (2, 2.0)]
+    stored = ps.sql(q)  # the miss runs its jobs here, inside sql()
+    assert ps.last_cache_hit is False
+    got = []
+    assert _jobs_run_by(spark, lambda: got.extend(stored.collect())) == 0
+    assert [tuple(r) for r in got] == want
+    hit = ps.sql(q)
+    assert ps.last_cache_hit is True
+    got.clear()
+    assert _jobs_run_by(spark, lambda: got.extend(hit.collect())) == 0
+    assert [tuple(r) for r in got] == want
+
+
+@pytest.mark.parametrize("q", [
+    "SELECT k, c, v FROM cv ORDER BY k",
+    "SELECT CAST('12.345' AS DECIMAL(10,3)) AS d, DATE '2020-02-29' AS dt, "
+    "CAST('2020-01-02 03:04:05.123456' AS DATETIME) AS ts, "
+    "TIMESTAMP_NTZ '2021-05-06 07:08:09' AS ntz, CAST(NULL AS INT) AS n",
+    "SELECT array(1, NULL, 3) AS a, map('x', 1, 'y', NULL) AS m, "
+    "named_struct('p', 1, 'q', 'z') AS st, X'00FF10' AS b",
+    "SELECT parse_json('{\"a\": [1, 2.5, null], \"b\": \"s\"}') AS va",
+    "SELECT INTERVAL '1 02:03:04.5' DAY TO SECOND AS iv",
+    "SELECT CAST('NaN' AS DOUBLE) AS nan, CAST('Infinity' AS DOUBLE) AS pinf, "
+    "CAST('-Infinity' AS DOUBLE) AS ninf, CAST('-0.0' AS DOUBLE) AS nz",
+])
+def test_result_cache_hit_keeps_types(spark, tmp_path, q):
+    ps = PaloSession(spark, location_root=str(tmp_path), result_cache=True)
+    ps.sql("CREATE TABLE cv (k INT, c CHAR(4), v VARCHAR(8)) DUPLICATE KEY(k)")
+    ps.sql("INSERT INTO cv VALUES (1,'ab','xyz'),(2,NULL,'')")
+    ps.result_cache_enabled = False
+    plain = ps.sql(q)
+    want_rows, want_schema = plain.collect(), plain.schema
+    ps.result_cache_enabled = True
     ps.sql(q)
-    assert ps.last_cache_hit is False  # 3 rows > limit 1: never cached
+    assert ps.last_cache_hit is False
+    hit = ps.sql(q)
+    assert ps.last_cache_hit is True
+    assert hit.schema == want_schema
+    # repr, not ==: VariantVal has no ==, NaN != NaN, and -0.0 == 0.0
+    assert repr(hit.collect()) == repr(want_rows)
 
 
 def test_truncate_reload_cannot_serve_stale_cache(spark, tmp_path):
