@@ -93,6 +93,15 @@ def _spread(df: DataFrame, *cols: str) -> DataFrame:
     it generalizes (r11/r12). With ``cols`` the frame is projected down
     first so only the bytes the downstream stage needs cross the wire.
 
+    The spread ends in ``Sample(1.0)``, which keeps every row (its
+    Bernoulli draw in [0, 1) is always below 1.0) and which Catalyst
+    never pushes a filter through. Without it a filter on the
+    projection's output — ``gopher_rules(df).filter("keep")``, the way
+    pipelines use the battery — is pushed through the round-robin
+    ``Repartition`` onto the scan, and the whole projection runs in the
+    filter on the unspread input again (measured: the quality stage ran
+    on 1 task).
+
     Use it ONLY where the serial stage is real interpreted compute:
     r13 measured the same insurance on codegen tokenize/explode stages
     (tfidf, bm25) and on the LSH signature folds (embedding_dup_pairs,
@@ -103,7 +112,7 @@ def _spread(df: DataFrame, *cols: str) -> DataFrame:
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     out = df.select(*cols) if cols else df
     if out.rdd.getNumPartitions() < parallelism:
-        out = out.repartition(parallelism)
+        out = out.repartition(parallelism).sample(fraction=1.0, seed=0)
     return out
 
 

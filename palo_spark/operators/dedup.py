@@ -1,15 +1,17 @@
 """Deduplication operators for training-data pipelines.
 
-All four strategies are built from native Catalyst expressions — no
-Python UDFs — so the hot path is whole-stage codegen and every shuffle
-is an explicit, keyed exchange:
+Every shuffle is an explicit, keyed exchange. The strategies are native
+Catalyst expressions except where a numpy kernel does the per-row
+arithmetic as a pandas UDF (MinHash signatures, and the embedding and
+LSH helpers further down):
 
 - **exact**: hash-groupBy on content (or chosen columns); one shuffle.
-- **MinHash + LSH**: shingle → n seeded hashes → min per seed →
-  band → bucket-join. Candidate generation is a self-join on
-  ``(band_id, band_hash)`` — only docs sharing a bucket ever meet,
-  never all-pairs (the all-pairs join is the thing that does NOT
-  survive 100 TB).
+- **MinHash + LSH**: normalized text → one pandas UDF that hashes every
+  k-char window and takes n permuted minima → band → bucket-join.
+  Candidate generation is a self-join on ``(band_id, band_hash)`` —
+  only docs sharing a bucket ever meet, never all-pairs (the all-pairs
+  join is the thing that does NOT survive 100 TB); native shingle sets
+  are built for candidate pairs only, to verify the exact Jaccard.
 - **SimHash**: per-token hashes → per-bit majority vote → 64-bit
   fingerprint; near-dup candidates via 4×16-bit chunk buckets
   (Hamming ≤ 3 guarantee by pigeonhole).
@@ -33,16 +35,22 @@ from pyspark.sql import functions as F
 from palo_spark.operators.cache import _persist
 
 
+def _normalized(col):
+    """The normalization every shingle-based dedup applies: trim,
+    collapse whitespace runs to one space, lowercase (native)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+
+
 def content_hash(col, *, normalize: bool = True):
     """64-bit content hash of a text column (xxhash64, JVM-side).
 
     ``normalize`` lowercases and collapses whitespace first, so
     formatting-only variants collapse to one hash.
     """
-    c = F.col(col) if isinstance(col, str) else col
     if normalize:
-        c = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
-    return F.xxhash64(c)
+        return F.xxhash64(_normalized(col))
+    return F.xxhash64(F.col(col) if isinstance(col, str) else col)
 
 
 def dedup_exact(df: DataFrame, cols: list[str] | None = None, id_col: str = "doc_id") -> DataFrame:
@@ -77,8 +85,7 @@ def shingles(col, k: int = 5):
     normalization appears only in the ``arrays_zip`` arguments
     (constant evaluations per row); ``array_distinct`` dedups.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+    norm = _normalized(col)
     # Java split keeps a trailing empty string at limit -1; slice to len
     chars = F.slice(F.split(norm, ""), 1, F.greatest(F.length(norm), F.lit(1)))
     m = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
@@ -110,34 +117,77 @@ def _permute_mod_p(h, a, b):
     """Exact ``(a·h + b) mod (2^61−1)`` over uint64, fully vectorized.
 
     ``h`` is a uint64 vector (values < 2^61), ``a``/``b`` uint64 vectors
-    of coefficients; returns the (len(a) × len(h)) matrix of permuted
-    values. The 122-bit product is computed via 32-bit split-multiply —
-    ``a·h = a1·h1·2^64 + (a1·h0 + a0·h1)·2^32 + a0·h0`` — and reduced
-    with the Mersenne identities ``2^64 ≡ 8`` and ``2^61 ≡ 1 (mod p)``.
-    Bit-exact with Python-int ``(a*h + b) % p`` (pinned by
-    tests/test_dedup.py::test_minhash_kernel_matches_object_math).
+    of coefficients (values < 2^61); returns the (len(a) × len(h))
+    matrix of permuted values. The 122-bit product is computed via
+    31-bit split-multiply — ``a·h = a1·h1·2^62 + (a1·h0 + a0·h1)·2^31 +
+    a0·h0`` — and reduced with the Mersenne identities ``2^62 ≡ 2`` and
+    ``2^61 ≡ 1 (mod p)``. Every partial sum stays below 2^64 without an
+    intermediate fold, the matrix steps run in place, and the final
+    reduction is ``min(s, s − p)`` (uint64 wrap-around makes ``s − p``
+    huge exactly when ``s < p``). Bit-exact with Python-int
+    ``(a*h + b) % p`` (pinned by
+    tests/test_operators.py::test_minhash_kernel_matches_object_math).
     """
     P = np.uint64(_MINHASH_P)
-    M32 = np.uint64(0xFFFFFFFF)
-    M29 = np.uint64((1 << 29) - 1)
-    a1, a0 = (a >> np.uint64(32))[:, None], (a & M32)[:, None]
-    h1, h0 = (h >> np.uint64(32))[None, :], (h & M32)[None, :]
-    hi = a1 * h1                 # < 2^58
-    mid = a1 * h0 + a0 * h1      # < 2^62
-    lo = a0 * h0                 # < 2^64 (exact in uint64)
-    # mid·2^32 = (mid>>29)·2^61 + (mid&M29)·2^32 ≡ (mid>>29) + (mid&M29)<<32
-    s = (
-        hi * np.uint64(8)
-        + (mid >> np.uint64(29))
-        + ((mid & M29) << np.uint64(32))
-        + (lo >> np.uint64(61))
-        + (lo & P)
-    )  # < 3·2^61 + ε, no uint64 overflow
-    s = (s & P) + (s >> np.uint64(61))
-    s = np.where(s >= P, s - P, s)
-    s = s + b[:, None]
-    s = (s & P) + (s >> np.uint64(61))
-    return np.where(s >= P, s - P, s)
+    M31 = np.uint64((1 << 31) - 1)
+    M30 = np.uint64((1 << 30) - 1)
+    S31 = np.uint64(31)
+    a1, a0 = (a >> S31)[:, None], (a & M31)[:, None]
+    h1, h0 = (h >> S31)[None, :], (h & M31)[None, :]
+    s = a0 * h0                          # lo < 2^62
+    t = (a1 << np.uint64(1)) * h1        # 2·hi < 2^61
+    s += t
+    mid = a1 * h0
+    np.multiply(a0, h1, out=t)
+    mid += t                             # mid < 2^62
+    # mid·2^31 = (mid>>30)·2^61 + (mid&M30)·2^31 ≡ (mid>>30) + (mid&M30)<<31
+    np.right_shift(mid, np.uint64(30), out=t)
+    s += t
+    mid &= M30
+    mid <<= S31
+    s += mid                             # < 2^63 + 2^32
+    s += b[:, None]                      # < 2^64: no overflow
+    np.right_shift(s, np.uint64(61), out=t)
+    s &= P
+    s += t                               # ≤ p + 5: one subtraction left
+    np.subtract(s, P, out=t)
+    return np.minimum(s, t, out=s)
+
+
+#: Shingles per MinHash kernel block. Each block's temporaries are
+#: n_hashes × block × 8 B (512 KB at 64 hashes), so they stay in cache;
+#: 2^18-shingle blocks (128 MB temporaries) ran the same signatures
+#: ~4× slower, memory-bound.
+_MINHASH_BLOCK = 1 << 10
+
+
+def _minhash_rows(flat, lens, a, b):
+    """Per-row MinHash minima: the one kernel behind both signature
+    front ends.
+
+    ``flat`` holds every row's base hashes back to back (uint64, values
+    < 2^61) and ``lens`` the count per row; returns an (n_rows ×
+    len(a)) int64 matrix. The flat vector is cut into fixed
+    ``_MINHASH_BLOCK`` slices regardless of row boundaries: each slice
+    is permuted once, ``np.minimum.reduceat`` takes the minima of the
+    row segments inside it, and a row that spans slices folds them into
+    its running minimum. A row with no hashes keeps the sentinel ``p``.
+    """
+    n = len(lens)
+    out = np.full((n, len(a)), _MINHASH_P, dtype=np.uint64)
+    bounds = np.concatenate([[0], np.cumsum(lens)])
+    rows = np.flatnonzero(lens)          # empty rows own no segment
+    starts, ends = bounds[:-1][rows], bounds[1:][rows]
+    for lo in range(0, len(flat), _MINHASH_BLOCK):
+        hi = min(lo + _MINHASH_BLOCK, len(flat))
+        # the rows overlapping [lo, hi): ends past lo, starts before hi
+        r0 = np.searchsorted(ends, lo, side="right")
+        r1 = np.searchsorted(starts, hi, side="left")
+        perm = _permute_mod_p(flat[lo:hi], a, b)
+        mins = np.minimum.reduceat(perm, np.maximum(starts[r0:r1], lo) - lo, axis=1)
+        sel = rows[r0:r1]
+        out[sel] = np.minimum(out[sel], mins.T)
+    return out.astype(np.int64)
 
 
 def minhash_signature(shingle_col, n_hashes: int = 64):
@@ -147,17 +197,16 @@ def minhash_signature(shingle_col, n_hashes: int = 64):
     ``(a_i·h + b_i) mod (2^61−1)`` evaluated as one vectorized numpy
     kernel per Arrow batch.
 
-    Returns an ``array<bigint>`` of length ``n_hashes``. History:
-    v1 evaluated ``n_hashes`` separate interpreted
+    Returns an ``array<bigint>`` of length ``n_hashes``; an empty or
+    NULL shingle array gets the sentinel signature (every value
+    ``2^61−1``). History: v1 evaluated ``n_hashes`` separate interpreted
     ``array_min(transform(xxhash64(s, seed)))`` folds; v2 used a
     per-row object-dtype (Python-int) matrix — exact but unvectorized
     (the slowest bench entry at r4). v3 (this form) flattens the whole
-    Arrow batch into one shingle-hash vector, permutes it with exact
-    uint64 split-multiply mod-p math (``_permute_mod_p``) and takes
-    per-row minima via ``np.minimum.reduceat`` — bit-identical
-    signatures to v2, ~100× less Python overhead. Chunked so peak
-    intermediate memory stays ~n_hashes×2^18×8 B ≈ 128 MB regardless
-    of batch size.
+    Arrow batch into one shingle-hash vector and hands it to
+    :func:`_minhash_rows` — exact uint64 split-multiply mod-p math
+    (``_permute_mod_p``) in cache-sized blocks of ``_MINHASH_BLOCK``
+    shingles, bit-identical signatures to v2.
     """
     c = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
     a, b = _minhash_coeffs(n_hashes)
@@ -166,36 +215,77 @@ def minhash_signature(shingle_col, n_hashes: int = 64):
 
     @F.pandas_udf("array<bigint>")
     def _sig(hashes: pd.Series) -> pd.Series:
-        n = len(hashes)
-        lens = np.zeros(n, dtype=np.int64)
-        arrs = []
-        for i, hs in enumerate(hashes):
-            if hs is not None and len(hs) > 0:
-                lens[i] = len(hs)
-                arrs.append(np.asarray(hs, dtype=np.int64))
-        out = np.full((n, n_hashes), _MINHASH_P, dtype=np.int64)
-        if arrs:
-            flat = np.concatenate(arrs).view(np.uint64) & np.uint64(_MINHASH_P)
-            bounds = np.concatenate([[0], np.cumsum(lens)])
-            CHUNK = 1 << 18  # shingles per vectorized block
-            rs = 0
-            while rs < n:
-                re_ = rs + 1
-                while re_ < n and bounds[re_ + 1] - bounds[rs] <= CHUNK:
-                    re_ += 1
-                seg = flat[bounds[rs] : bounds[re_]]
-                if len(seg):
-                    perm = _permute_mod_p(seg, a_u, b_u)
-                    starts = (bounds[rs:re_] - bounds[rs]).astype(np.int64)
-                    mins = np.minimum.reduceat(
-                        perm, np.minimum(starts, len(seg) - 1), axis=1
-                    )
-                    sel = lens[rs:re_] > 0  # empty rows got a neighbor's value
-                    out[rs:re_][sel] = mins.T.astype(np.int64)[sel]
-                rs = re_
-        return pd.Series(list(out))
+        lens = np.fromiter(
+            (0 if hs is None else len(hs) for hs in hashes), np.int64, len(hashes)
+        )
+        arrs = [np.asarray(hs, dtype=np.int64) for hs in hashes if hs is not None and len(hs)]
+        flat = np.concatenate(arrs) if arrs else np.zeros(0, np.int64)
+        flat = flat.view(np.uint64) & np.uint64(_MINHASH_P)
+        return pd.Series(list(_minhash_rows(flat, lens, a_u, b_u)))
 
     return _sig(F.transform(c, lambda s: F.xxhash64(s)))
+
+
+_FNV_OFFSET = np.uint64(0xCBF29CE484222325)
+_FNV_PRIME = np.uint64(0x100000001B3)
+
+
+def _shingle_hashes(texts, k: int):
+    """Fixed 64-bit hashes of every k-code-point window of each text —
+    the numpy twin of :func:`shingles` for signature building.
+
+    ``texts`` are already normalized; a text shorter than ``k`` (the
+    empty string included) is one shingle, the whole text, as in
+    :func:`shingles`; ``None`` has no shingles. Returns ``(flat,
+    lens)``: the hashes back to back (uint64, masked to 61 bits) and
+    the count per text. The whole batch is decoded once as UTF-32, each
+    window is folded FNV-1a style over its code points and finished
+    with the murmur3 64-bit mixer — vectorized over all windows, and
+    unlike Python's ``hash()`` (salted per process) the same on every
+    worker. Duplicate windows are kept: a minimum does not care.
+    """
+    strs = [t if isinstance(t, str) else "" for t in texts]
+    n_chars = np.fromiter(map(len, strs), np.int64, len(strs))
+    # one padding code point so an all-empty batch still indexes
+    cps = np.frombuffer(("".join(strs) + "\0").encode("utf-32-le"), dtype=np.uint32)
+    lens = np.maximum(n_chars - (k - 1), 1)
+    lens[[not isinstance(t, str) for t in texts]] = 0
+    text_start = np.cumsum(n_chars) - n_chars
+    win_first = np.cumsum(lens) - lens
+    total = int(lens.sum())
+    pos = np.arange(total) + np.repeat(text_start - win_first, lens)
+    end = np.repeat(text_start + n_chars, lens)
+    h = np.full(total, _FNV_OFFSET, dtype=np.uint64)
+    for j in range(k):
+        idx = pos + j
+        h = np.where(idx < end, (h ^ cps[np.minimum(idx, len(cps) - 1)]) * _FNV_PRIME, h)
+    for mul in (0xFF51AFD7ED558CCD, 0xC4CEB9FE1A85EC53):
+        h ^= h >> np.uint64(33)
+        h *= np.uint64(mul)
+    h ^= h >> np.uint64(33)
+    return h & np.uint64(_MINHASH_P), lens
+
+
+def _text_signature(norm_col, k: int, n_hashes: int):
+    """MinHash signature straight from normalized text: one pandas UDF
+    hashes the k-char windows (:func:`_shingle_hashes`) and runs the
+    :func:`_minhash_rows` kernel — no per-doc shingle array is ever
+    built. NULL text gives a NULL signature. The values differ from
+    ``minhash_signature(shingles(...))`` (another base hash), the
+    Jaccard they estimate does not."""
+    a, b = _minhash_coeffs(n_hashes)
+    a_u = a.astype(np.uint64)
+    b_u = b.astype(np.uint64)
+
+    @F.pandas_udf("array<bigint>")
+    def _sig(texts: pd.Series) -> pd.Series:
+        flat, lens = _shingle_hashes(texts, k)
+        sigs = _minhash_rows(flat, lens, a_u, b_u)
+        return pd.Series(
+            [sig if isinstance(t, str) else None for t, sig in zip(texts, sigs)]
+        )
+
+    return _sig(norm_col)
 
 
 def _band_hash(sig_col, bands: int, rows_per_band: int):
@@ -254,12 +344,17 @@ def dedup_minhash(
     """Fuzzy dedup via MinHash + LSH banding.
 
     Pipeline (each step one keyed shuffle, never all-pairs):
-      1. signature per doc (no shuffle),
+      1. signature per doc (no shuffle): the text is normalized natively
+         and ONE pandas UDF hashes its k-char windows and takes the
+         ``n_hashes`` MinHash minima (:func:`_text_signature`) — no
+         per-doc shingle array is built or cached; docs with NULL text
+         get no signature and never become candidates,
       2. explode to (band, band_hash) and self-join on the bucket —
          candidate pairs only among bucket-mates,
       3. score the pair: with ``verify_exact`` (default, the production
-         design) the TRUE shingle-set Jaccard is computed on the
-         candidate pairs only — the output is then exact and
+         design) the candidate pairs are joined back to their texts and
+         the TRUE shingle-set Jaccard (native :func:`shingles`) is
+         computed for those docs only — the output is then exact and
          hash-independent (LSH misses a j≥0.8 pair with probability
          (1−j⁴)¹⁶ < 1e-8); with ``verify_exact=False`` the estimated
          Jaccard (fraction of equal signature positions) is used —
@@ -273,45 +368,43 @@ def dedup_minhash(
 
     ``materialize`` (default): the kept-id set — ids only, one row per
     surviving doc — is computed eagerly (localCheckpoint) and the
-    internal shingle/signature caches are unpersisted before returning,
-    so the call leaves no tracked cache behind (structural release —
-    VERDICT r8 #3). ``materialize=False`` keeps the fully lazy plan
-    (persists tracked under tag ``dedup_minhash``; caller releases via
-    ``release_persisted``) for plan introspection / composition.
+    internal signature cache is unpersisted before returning, so the
+    call leaves no tracked cache behind (structural release — VERDICT
+    r8 #3). ``materialize=False`` keeps the fully lazy plan (the
+    signature persist is tracked under tag ``dedup_minhash``; caller
+    releases via ``release_persisted``) for plan introspection /
+    composition.
     """
     rows_per_band = n_hashes // bands
-    src = df
+    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < parallelism:
         # few-file inputs (one parquet footer at small SF) would run the
-        # shingle + 64-hash signature projection — the expensive stage —
-        # on 1-2 tasks; the input here is (id, text) narrow, so this
-        # shuffle is cheap insurance (same fix as substring_dup_docs)
-        src = src.select(F.col(id_col), F.col(text_col)).repartition(parallelism)
-    sh = src.select(
-        F.col(id_col).alias("__id"), shingles(text_col, shingle_k).alias("__sh")
+        # signature UDF — the expensive stage — on 1-2 tasks; the input
+        # here is (id, text) narrow, so this shuffle is cheap insurance
+        # (same fix as substring_dup_docs)
+        src = src.repartition(parallelism)
+    # the signature feeds BOTH sides of the bucket self-join: without a
+    # persist the UDF would run once per branch. MEMORY_AND_DISK: spills
+    # instead of OOMing at scale; the sketch (64 longs/doc) is tiny next
+    # to the corpus it indexes. Tracked in operators.cache — callers of
+    # the lazy form release via release_persisted().
+    sig = _persist(
+        src.select(
+            "__id", _text_signature(_normalized("__t"), shingle_k, n_hashes).alias("__sig")
+        ),
+        "dedup_minhash",
     )
-    sig = sh.select(
-        "__id", minhash_signature(F.col("__sh"), n_hashes).alias("__sig")
-    )
-    # the signature feeds BOTH sides of the bucket self-join (and the
-    # shingle sets feed the verify join): without a persist the whole
-    # shingle→64-hash pipeline is recomputed per branch — measured 2.4×
-    # slower. MEMORY_AND_DISK: spills instead of OOMing at scale; the
-    # sketch (64 longs/doc) is tiny next to the corpus it indexes.
-    # ``sig`` deliberately does NOT carry ``__sh``: the shingle arrays
-    # are the heaviest column and live in ``sh``'s cache already —
-    # carrying them here would double-cache the corpus's dominant bytes.
-    # Tracked in operators.cache — callers release via release_persisted().
-    sh = _persist(sh, "dedup_minhash")
-    sig = _persist(sig, "dedup_minhash")
     # with exact verification the bucket self-join needs only (id, band,
     # bucket-hash) — shuffling the 64-long signatures through the join
     # (both sides × ``bands`` rows each) would multiply shuffle volume
     # for columns the verify path never reads; only the estimated-
     # Jaccard path carries them
     sig_cols = [] if verify_exact else ["__sig"]
-    buckets = sig.select(
+    # NULL text has no signature. The filter sits on the cached frame:
+    # above the UDF, Catalyst would push it through the repartition and
+    # run the UDF a second time on the unspread input.
+    buckets = sig.filter(F.col("__sig").isNotNull()).select(
         "__id", *sig_cols, F.explode(_band_hash("__sig", bands, rows_per_band)).alias("__b")
     ).select("__id", *sig_cols, F.col("__b.band").alias("__band"), F.col("__b.bh").alias("__bh"))
 
@@ -333,33 +426,45 @@ def dedup_minhash(
         .dropDuplicates(["id_a", "id_b"])
     )
     if verify_exact:
-        sh_a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
-        sh_b = sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
-        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        est = (
+        # shingle sets only for the docs of a candidate pair, straight
+        # from the input (not the repartitioned copy: that would re-run
+        # its exchange)
+        txt = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
+        t_a = txt.select(F.col("__id").alias("id_a"), F.col("__t").alias("t_a"))
+        t_b = txt.select(F.col("__id").alias("id_b"), F.col("__t").alias("t_b"))
+        sh = (
             pairs.select("id_a", "id_b")
-            .join(sh_a, "id_a")
-            .join(sh_b, "id_b")
-            .withColumn(
-                "__jac",
-                inter
-                / (F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter),
+            .join(t_a, "id_a")
+            .join(t_b, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                shingles("t_a", shingle_k).alias("sh_a"),
+                shingles("t_b", shingle_k).alias("sh_b"),
             )
-            .filter(F.col("__jac") >= threshold)
         )
+        scored = sh.select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("__i"),
+            (F.size("sh_a") + F.size("sh_b")).alias("__n"),
+        )
+        jac = F.col("__i") / (F.col("__n") - F.col("__i"))
     else:
-        est = pairs.withColumn(
-            "__jac",
-            F.aggregate(
-                F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            )
-            / F.lit(float(n_hashes)),
-        ).filter(F.col("__jac") >= threshold)
+        scored = pairs
+        jac = F.aggregate(
+            F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        ) / F.lit(float(n_hashes))
 
-    # canonical id per doc: min over matched partners (and self)
-    edges = est.select(F.col("id_b").alias("__id"), F.col("id_a").alias("__canon"))
+    # canonical id per doc: min over matched partners (and self). A
+    # candidate below the threshold contributes NULL, which min skips —
+    # a projection, not a filter: Catalyst would push a filter into the
+    # join condition and evaluate each shingle set there twice.
+    edges = scored.select(
+        F.col("id_b").alias("__id"), F.when(jac >= threshold, F.col("id_a")).alias("__canon")
+    )
     canon = df.select(F.col(id_col).alias("__id")).join(edges, "__id", "left").groupBy(
         "__id"
     ).agg(F.least(F.min("__canon"), F.min("__id")).alias("__canon"))
@@ -378,11 +483,11 @@ def dedup_minhash(
 
         try:
             # ids-only: ~8 bytes/doc — trivial next to the corpus. The
-            # shingle/signature caches serve the one checkpoint job,
-            # then release unconditionally.
+            # signature cache serves the one checkpoint job, then
+            # releases unconditionally.
             keep = _materialize(keep)
         finally:
-            _release_frames(sh, sig)
+            _release_frames(sig)
     return df.join(keep, df[id_col] == keep["__id"], "left_semi")
 
 

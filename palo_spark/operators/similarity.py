@@ -81,6 +81,18 @@ def _qdot(a, b, m: float = 1e6):
     )
 
 
+def _cosine_sql(a: str, b: str, quantized: bool) -> str:
+    """SQL form of :func:`cosine_similarity` over two column/expression
+    strings (see _dot_sql)."""
+    if quantized:
+        return (
+            f"(CAST({_qdot_sql(a, b)} AS DOUBLE) / "
+            f"SQRT((CAST({_qdot_sql(a, a)} AS DOUBLE) * "
+            f"CAST({_qdot_sql(b, b)} AS DOUBLE))))"
+        )
+    return f"({_dot_sql(a, b)} / (SQRT({_dot_sql(a, a)}) * SQRT({_dot_sql(b, b)})))"
+
+
 def cosine_similarity(a, b, *, quantized: bool = False):
     """Cosine similarity of two ``array<float|double>`` columns.
 
@@ -91,17 +103,7 @@ def cosine_similarity(a, b, *, quantized: bool = False):
     if isinstance(a, str) and isinstance(b, str):
         # one-parse SQL twin (see _dot_sql) — same tree, ~30x cheaper
         # to construct than six HOF Column calls
-        qa, qb = f"`{a}`", f"`{b}`"
-        if quantized:
-            return F.expr(
-                f"(CAST({_qdot_sql(qa, qb)} AS DOUBLE) / "
-                f"SQRT((CAST({_qdot_sql(qa, qa)} AS DOUBLE) * "
-                f"CAST({_qdot_sql(qb, qb)} AS DOUBLE))))"
-            )
-        return F.expr(
-            f"({_dot_sql(qa, qb)} / "
-            f"(SQRT({_dot_sql(qa, qa)}) * SQRT({_dot_sql(qb, qb)})))"
-        )
+        return F.expr(_cosine_sql(f"`{a}`", f"`{b}`", quantized))
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
     if quantized:
@@ -111,22 +113,32 @@ def cosine_similarity(a, b, *, quantized: bool = False):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _vec_lit_sql(vec) -> str | None:
+    """SQL literal text of a Python vector as ``array<double>`` (``1.5D``
+    double-literal syntax), or None when a value is non-finite — those
+    have no SQL literal syntax. ``repr`` round-trips doubles exactly and
+    Spark's parser correctly rounds back to the identical bits
+    (verified bit-equal against the ``F.lit`` form)."""
+    vals = [float(x) for x in vec]
+    if all(np.isfinite(v) for v in vals):
+        return "array(" + ",".join(f"{v!r}D" for v in vals) + ")"
+    return None
+
+
 def _vec_lit(vec) -> "F.Column":
     """Literal ``array<double>`` column for a Python vector.
 
-    Built as ONE ``F.expr`` string (``1.5D`` double-literal syntax) —
-    the per-element ``F.array(*[F.lit(x) ...])`` form costs one py4j
+    Built as ONE ``F.expr`` string (:func:`_vec_lit_sql`) — the
+    per-element ``F.array(*[F.lit(x) ...])`` form costs one py4j
     round-trip per element, which at 8 centroids × 64 dims was ~0.45 s
     of pure driver-side plan construction PER ivf_assign call (r13
-    cProfile: 1,614 lit calls → 10,872 py4j sends). ``repr`` round-trips
-    doubles exactly and Spark's parser correctly rounds back to the
-    identical bits (verified bit-equal against the lit form). Non-finite
-    values have no SQL literal syntax — fall back to the slow form.
+    cProfile: 1,614 lit calls → 10,872 py4j sends). Non-finite values
+    fall back to the slow form.
     """
-    vals = [float(x) for x in vec]
-    if all(np.isfinite(v) for v in vals):
-        return F.expr("array(" + ",".join(f"{v!r}D" for v in vals) + ")")
-    return F.array(*[F.lit(v) for v in vals])
+    lit = _vec_lit_sql(vec)
+    if lit is not None:
+        return F.expr(lit)
+    return F.array(*[F.lit(float(x)) for x in vec])
 
 
 def similarity_topk(
@@ -142,13 +154,20 @@ def similarity_topk(
 
     Returns (id, score) ordered by score desc, id asc (deterministic
     tie-break). Plan: scan → per-row fold → TakeOrderedAndProject(k).
+    The score is rendered as ONE SQL string (:func:`_cosine_sql` over
+    the column and the query's literal text) and parsed by one
+    ``F.expr`` — the Column form cost six higher-order-function py4j
+    calls per query; the tree is the same (pinned by
+    test_sql_fold_twins_bit_identical). A vector with a non-finite value
+    has no literal text and takes the Column form.
     """
-    q = _vec_lit(query_vec)
+    lit = _vec_lit_sql(query_vec)
+    if lit is not None:
+        score = F.expr(_cosine_sql(f"`{vec_col}`", lit, quantized))
+    else:
+        score = cosine_similarity(F.col(vec_col), _vec_lit(query_vec), quantized=quantized)
     return (
-        df.select(
-            F.col(id_col),
-            cosine_similarity(F.col(vec_col), q, quantized=quantized).alias("score"),
-        )
+        df.select(F.col(id_col), score.alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
     )

@@ -1126,7 +1126,9 @@ def gopher_rules(
     # the rule battery is interpreted higher-order lambdas (never
     # codegen) riding the scan stage — on a few-file input that stage
     # is 1-2 tasks and the whole battery runs serially (measured 1.4 s
-    # at sf0.1); spread the rows first, a no-op at real corpus scale
+    # at sf0.1); spread the rows first, a no-op at real corpus scale.
+    # The spread also fences off filter pushdown, so a filter on
+    # ``keep_col`` evaluates the battery after the exchange.
     df = _spread(df)
     c = F.col(text_col)
     words = F.filter(

@@ -90,7 +90,8 @@ def test_operators_leave_no_tracked_caches(spark, sf_dir):
 
 def test_lazy_form_still_tracks_and_releases(spark, sf_dir):
     """materialize=False keeps the r8 caller-release contract — the
-    plan-introspection/composition escape hatch."""
+    plan-introspection/composition escape hatch. dedup_minhash persists
+    one frame, its (id, signature) sketch."""
     from palo_spark.operators import dedup_minhash
     from palo_spark.operators.cache import release_persisted
 
@@ -98,7 +99,7 @@ def test_lazy_form_still_tracks_and_releases(spark, sf_dir):
         "doc_id", "text"
     )
     out = dedup_minhash(docs, threshold=0.9, materialize=False)
-    assert [t for t, _ in _PERSISTED] == ["dedup_minhash", "dedup_minhash"]
+    assert [t for t, _ in _PERSISTED] == ["dedup_minhash"]
     assert out.count() > 0
-    assert release_persisted("dedup_minhash") == 2
+    assert release_persisted("dedup_minhash") == 1
     assert _PERSISTED == []

@@ -62,6 +62,90 @@ def test_dedup_minhash_removes_near_dups(spark):
     assert kept == [1, 3]
 
 
+def _norm_text(t):
+    """Python replay of ``dedup._normalized``: Spark's trim strips
+    spaces only, Java's ``\\s`` is [ \\t\\n\\x0B\\f\\r]."""
+    import re
+
+    return re.sub(r"[ \t\n\x0b\f\r]+", " ", t.strip(" ")).lower()
+
+
+def _shingle_set(t, k=5):
+    n = _norm_text(t)
+    return {n[i:i + k] for i in range(max(len(n) - k + 1, 1))}
+
+
+#: near duplicates (one word changed), accented Latin and CJK, texts
+#: shorter than k, whitespace/case variants, the empty string and NULL
+MINHASH_CORPUS = [
+    (1, BASE),
+    (2, BASE.replace("village", "hamlet")),
+    (3, "completely different text about spark and parquet files"),
+    (4, "Élodie a mangé une crème brûlée près du château de Genève avec ses amis"),
+    (5, "ÉLODIE a mangé une crème brûlée près du château de Genève avec ses amies"),
+    (6, "我们今天在北京的公园里散步然后去吃了很好吃的饺子和面条还喝了绿茶"),
+    (7, "我们今天在北京的公园里散步然后去吃了很好吃的饺子和面条还喝了红茶"),
+    (8, "abc"),
+    (9, "  ABC "),
+    (10, "ab"),
+    (11, ""),
+    (12, "   "),
+    (13, None),
+    (14, None),
+    (15, BASE.replace("quick", "slow").replace("rain", "snow")),
+    (16, "Crème brûlée 和 饺子 in one mixed line of text, près du 公园"),
+]
+
+
+def test_dedup_minhash_matches_bruteforce_jaccard(spark):
+    """Survivors equal a brute-force exact-Jaccard replay (single-hop
+    canonicalization: a doc goes iff a lower id is similar), over
+    non-ASCII, short, empty and NULL texts — none of which may fail its
+    Arrow batch."""
+    df = _docs(spark, MINHASH_CORPUS)
+    for threshold in (0.6, 0.8):
+        sets = {i: _shingle_set(t) for i, t in MINHASH_CORPUS if t is not None}
+
+        def jac(x, y):
+            return len(sets[x] & sets[y]) / len(sets[x] | sets[y])
+
+        want = sorted(
+            i for i, _ in MINHASH_CORPUS
+            if i not in sets or not any(j < i and jac(j, i) >= threshold for j in sets if j != i)
+        )
+        got = sorted(r["doc_id"] for r in dedup_minhash(df, threshold=threshold).collect())
+        assert got == want, threshold
+    # the replay is not vacuous: at 0.8 each planted twin goes, the
+    # two-word edit of doc 1 (Jaccard 0.81) too
+    assert set(range(1, 17)) - set(got) == {2, 5, 7, 9, 12, 15}
+
+
+def test_text_signature_hashes_the_native_shingle_set(spark):
+    """The signature UDF's k-char windows are exactly ``shingles()``'s
+    set: per doc, the distinct window hashes equal the hashes of the
+    native shingles (a shingle of length <= k hashes as a one-window
+    text). NULL text gets a NULL signature; every other text one."""
+    from palo_spark.operators.dedup import _normalized, _shingle_hashes, _text_signature, shingles
+
+    df = _docs(spark, MINHASH_CORPUS).coalesce(1)
+    rows = df.select(
+        "doc_id",
+        _normalized("text").alias("norm"),
+        shingles("text").alias("sh"),
+        _text_signature(_normalized("text"), 5, 64).alias("sig"),
+    ).collect()
+    for r in rows:
+        if r["norm"] is None:
+            assert r["sh"] is None and r["sig"] is None
+            continue
+        assert r["norm"] == _norm_text(dict(MINHASH_CORPUS)[r["doc_id"]])
+        flat, lens = _shingle_hashes([r["norm"]], 5)
+        assert int(lens[0]) == max(len(r["norm"]) - 4, 1)
+        native = {int(_shingle_hashes([s], 5)[0][0]) for s in r["sh"]}
+        assert {int(h) for h in flat} == native, r["doc_id"]
+        assert len(r["sig"]) == 64
+
+
 def test_dedup_minhash_estimated_mode(spark):
     df = _docs(spark, [(1, BASE), (2, BASE), (3, "unrelated words entirely")])
     kept = sorted(
@@ -674,10 +758,18 @@ def test_minhash_kernel_matches_object_math():
 def test_minhash_signature_batch_edge_cases(spark):
     """Empty/NULL shingle arrays produce the sentinel signature; the
     flat-batch reduceat path must not leak a neighbor's minima into
-    empty rows (including trailing empties)."""
+    empty rows (including trailing empties). A batch that spans several
+    kernel blocks — a row ending exactly on a block edge, empty rows at
+    block edges, one row larger than a block — must give every row the
+    signature per-row object math gives."""
     import numpy as np
     from pyspark.sql import functions as F
-    from palo_spark.operators.dedup import _MINHASH_P, minhash_signature
+    from palo_spark.operators.dedup import (
+        _MINHASH_BLOCK,
+        _MINHASH_P,
+        _minhash_coeffs,
+        minhash_signature,
+    )
 
     df = spark.createDataFrame(
         [("a", ["x", "y", "z"]), ("b", []), ("c", ["x", "y", "z"]), ("d", None), ("e", [])],
@@ -687,6 +779,30 @@ def test_minhash_signature_batch_edge_cases(spark):
     sentinel = [_MINHASH_P] * 64
     assert rows["b"] == sentinel and rows["d"] == sentinel and rows["e"] == sentinel
     assert rows["a"] == rows["c"] and rows["a"] != sentinel
+
+    B = _MINHASH_BLOCK
+    # row lengths; running totals B-1, B, B, 3B+5, 4B, 4B, 4B+7, 4B+7 —
+    # a one-shingle row ends on the first block edge, so a minimum
+    # leaking in from the next block would show in most positions
+    lens = [B - 1, 1, 0, 2 * B + 5, B - 5, 0, 7, 0]
+    big = [
+        (f"r{i}", [f"w{i % 3}_{j}" for j in range(n)]) for i, n in enumerate(lens)
+    ] + [("null", None)]
+    df = spark.createDataFrame(big, "id string, sh array<string>").coalesce(1)
+    got = df.select(
+        "id",
+        F.transform("sh", lambda s: F.xxhash64(s)).alias("h"),
+        minhash_signature(F.col("sh")).alias("sig"),
+    ).collect()
+    a, b = _minhash_coeffs(64)
+    a_o, b_o = [int(x) for x in a], [int(x) for x in b]
+    for r in got:
+        hs = [h & _MINHASH_P for h in (r["h"] or [])]
+        want = [
+            min(((ai * h + bi) % _MINHASH_P for h in hs), default=_MINHASH_P)
+            for ai, bi in zip(a_o, b_o)
+        ]
+        assert r["sig"] == want, r["id"]
 
 
 def test_lsh_band_bits_null_and_ragged_vectors(spark):

@@ -147,6 +147,29 @@ def test_dedup_minhash_has_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_gopher_keep_filter_runs_after_the_spread(spark):
+    """gopher_rules spreads a few-partition input before its interpreted
+    rule battery. A filter on ``keep`` — how pipelines use it — must
+    stay above the round-robin exchange: pushed below it, the whole
+    battery runs in the filter on the unspread single task."""
+    import re
+
+    from palo_spark.operators import gopher_rules
+
+    assert spark.sparkContext.defaultParallelism > 1
+    text = "the cat sat with the dog and a bird " * 8
+    df = spark.createDataFrame(
+        [(i, text) for i in range(20)], "doc_id long, text string"
+    ).coalesce(1)
+    kept = gopher_rules(df, "text", min_words=30).filter("keep")
+    lines = kept._jdf.queryExecution().executedPlan().toString().splitlines()
+    ex = [i for i, ln in enumerate(lines) if "Exchange RoundRobinPartitioning" in ln]
+    filters = [i for i, ln in enumerate(lines) if re.search(r"[+-] (\*\(\d+\) )?Filter ", ln)]
+    assert len(ex) == 1, lines
+    assert filters and all(i < ex[0] for i in filters), lines
+    assert kept.count() == 20
+
+
 def test_embedding_dedup_has_no_cartesian(spark, sf_dir):
     from palo_spark.operators import dedup_embedding_cosine
 

@@ -162,10 +162,11 @@ def test_partition_rollup_read_handle_cache(spark, tmp_path):
 
 
 def test_sql_fold_twins_bit_identical(spark):
-    """_dot_sql/_qdot_sql/_vec_lit/cosine_similarity(str,str) and the
-    ivf_assign one-parse path must be BIT-identical to the Column-built
-    forms — they are the same expression tree rendered via the SQL
-    parser instead of per-node py4j calls."""
+    """_dot_sql/_qdot_sql/_vec_lit/cosine_similarity(str,str), the
+    ivf_assign one-parse path and similarity_topk's one-parse score must
+    be BIT-identical to the Column-built forms — they are the same
+    expression tree rendered via the SQL parser instead of per-node
+    py4j calls."""
     import math
 
     import numpy as np
@@ -178,6 +179,7 @@ def test_sql_fold_twins_bit_identical(spark):
         _vec_lit,
         cosine_similarity,
         ivf_assign,
+        similarity_topk,
     )
 
     rng = np.random.default_rng(7)
@@ -234,6 +236,32 @@ def test_sql_fold_twins_bit_identical(spark):
     # non-finite values must still work via the fallback form
     nf = spark.range(1).select(_vec_lit([1.0, float("inf")]).alias("v")).first()
     assert nf["v"][1] == float("inf")
+
+    def _hex(x):
+        return None if x is None else x.hex()
+
+    q = [float(x) for x in rng.normal(size=16)]
+    q_col = F.array(*[F.lit(x) for x in q])
+    for quantized in (False, True):
+        for k in (5, len(rows)):
+            fast = similarity_topk(
+                df, q, k, vec_col="a", id_col="id", quantized=quantized
+            ).collect()
+            slow = (
+                df.select(
+                    "id",
+                    cosine_similarity(F.col("a"), q_col, quantized=quantized).alias("score"),
+                )
+                .orderBy(F.desc("score"), F.col("id"))
+                .limit(k)
+                .collect()
+            )
+            assert [(r["id"], _hex(r["score"])) for r in fast] == [
+                (r["id"], _hex(r["score"])) for r in slow
+            ], (quantized, k)
+    # a non-finite query has no literal text: the Column fallback runs
+    nf_top = similarity_topk(df, [float("nan")] + q[1:], 3, vec_col="a", id_col="id").collect()
+    assert len(nf_top) == 3
 
 
 def test_band_hash_sql_twin_bit_identical(spark):
